@@ -45,9 +45,11 @@ def pytest_addoption(parser):
 
 
 def full_tier_enabled(config) -> bool:
-    return bool(
-        config.getoption("--full-tests", default=False)
-        or os.environ.get("SPARK_GRAFT_FULL_TESTS")
+    """``--full-tests``, or ``SPARK_GRAFT_FULL_TESTS`` set to 1/true/yes
+    (any case); other values, ``0`` included, keep the default tier."""
+    env = os.environ.get("SPARK_GRAFT_FULL_TESTS", "").strip().lower()
+    return bool(config.getoption("--full-tests", default=False)) or env in (
+        "1", "true", "yes"
     )
 
 
@@ -96,6 +98,28 @@ def spark():
 
     s = get_spark("esther-tests", shuffle_partitions=8)
     yield s
+
+
+@pytest.fixture(scope="session")
+def cc_both_paths():
+    """``run(thunk)``: call ``thunk`` with connected components forced
+    onto the distributed loop (edge budget -1), then onto the
+    driver-local path (budget above any test graph), assert both
+    results are equal and return it. Every connected-components call
+    inside ``thunk`` follows the forced path."""
+    from unittest import mock
+
+    from esther_apache_spark_spark.operators import components
+
+    def run(thunk):
+        with mock.patch.object(components, "LOCAL_EDGE_BUDGET", -1):
+            distributed = thunk()
+        with mock.patch.object(components, "LOCAL_EDGE_BUDGET", 1 << 40):
+            local = thunk()
+        assert local == distributed
+        return local
+
+    return run
 
 
 @pytest.fixture(scope="session")

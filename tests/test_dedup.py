@@ -671,3 +671,21 @@ def test_auto_collapse_dup_mass_probe(spark):
     auto_ng = pairs(D.ngram_jaccard_pairs(heavy, threshold=0.5))
     direct_ng = pairs(D.ngram_jaccard_pairs(heavy, threshold=0.5, collapse_exact=False))
     assert auto_ng == direct_ng
+
+
+def test_spread_narrow_input_logs_failed_probe(caplog):
+    """The narrow-input spread is best effort: when the size probe
+    raises, the input comes back unchanged and the reason is logged at
+    DEBUG instead of being swallowed."""
+
+    class NoSession:
+        @property
+        def sparkSession(self):
+            raise RuntimeError("no session behind this plan")
+
+    df = NoSession()
+    with caplog.at_level("DEBUG", logger=D.__name__):
+        assert D._spread_narrow_input(df) is df
+    [rec] = [r for r in caplog.records if r.name == D.__name__]
+    assert "size probe failed" in rec.getMessage()
+    assert "no session behind this plan" in rec.getMessage()

@@ -9,6 +9,9 @@ adversarial structure the equivalence argument leans on: deep clone
 clusters (cap-chunked expansion in the reference), edge-free clone
 groups (intra-only components), empty-shingle / zero-norm clone groups
 (must stay unlabeled), cross-cluster near-dup bridges, and singletons.
+Every check runs with connected components forced onto the distributed
+loop and onto the driver-local path (``cc_both_paths``), which must
+agree.
 """
 
 from __future__ import annotations
@@ -58,19 +61,24 @@ def ngram_docs(spark):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
-def test_ngram_quotient_equals_expanded_and_direct(ngram_docs):
-    quotient = _labels(
-        D.ngram_jaccard_components(ngram_docs, collapse_exact=True)
-    )
-    # reference 1: CC over the collapsed pair API at a cap SMALLER than
-    # the deepest clone cluster (chunked cliques + connector chains)
-    expanded = _cc_over_pairs(
-        D.ngram_jaccard_pairs(ngram_docs, collapse_exact=True, expand_cap=3)
-    )
-    # reference 2: CC over the direct (uncollapsed, uncapped) pair set
-    direct = _cc_over_pairs(
-        D.ngram_jaccard_pairs(ngram_docs, collapse_exact=False)
-    )
+def test_ngram_quotient_equals_expanded_and_direct(ngram_docs, cc_both_paths):
+    def run():
+        quotient = _labels(
+            D.ngram_jaccard_components(ngram_docs, collapse_exact=True)
+        )
+        # reference 1: CC over the collapsed pair API at a cap SMALLER
+        # than the deepest clone cluster (chunked cliques + connector
+        # chains)
+        expanded = _cc_over_pairs(
+            D.ngram_jaccard_pairs(ngram_docs, collapse_exact=True, expand_cap=3)
+        )
+        # reference 2: CC over the direct (uncollapsed, uncapped) pair set
+        direct = _cc_over_pairs(
+            D.ngram_jaccard_pairs(ngram_docs, collapse_exact=False)
+        )
+        return quotient, expanded, direct
+
+    quotient, expanded, direct = cc_both_paths(run)
     assert quotient == expanded == direct
     # structure sanity: A+B bridged into one cluster labeled min id 1;
     # the edge-free clone pair self-clusters at 21; empties unlabeled
@@ -79,12 +87,16 @@ def test_ngram_quotient_equals_expanded_and_direct(ngram_docs):
     assert 31 not in quotient and 41 not in quotient and 42 not in quotient
 
 
-def test_ngram_components_direct_path_matches(ngram_docs):
+def test_ngram_components_direct_path_matches(ngram_docs, cc_both_paths):
     # collapse_exact=False inside the components API = plain CC over
     # direct pairs — same labels again
-    assert _labels(
-        D.ngram_jaccard_components(ngram_docs, collapse_exact=False)
-    ) == _cc_over_pairs(D.ngram_jaccard_pairs(ngram_docs, collapse_exact=False))
+    got, ref = cc_both_paths(
+        lambda: (
+            _labels(D.ngram_jaccard_components(ngram_docs, collapse_exact=False)),
+            _cc_over_pairs(D.ngram_jaccard_pairs(ngram_docs, collapse_exact=False)),
+        )
+    )
+    assert got == ref
 
 
 # --- simhash ---------------------------------------------------------------
@@ -92,22 +104,26 @@ def test_ngram_components_direct_path_matches(ngram_docs):
 SIMHASH_KW = dict(band_bits=15, bits=60, hash_family="md5")
 
 
-def test_simhash_quotient_equals_expanded_and_direct(ngram_docs):
-    quotient = _labels(
-        D.simhash_components(
-            ngram_docs, collapse_exact=True, max_hamming=8, **SIMHASH_KW
+def test_simhash_quotient_equals_expanded_and_direct(ngram_docs, cc_both_paths):
+    def run():
+        quotient = _labels(
+            D.simhash_components(
+                ngram_docs, collapse_exact=True, max_hamming=8, **SIMHASH_KW
+            )
         )
-    )
-    expanded = _cc_over_pairs(
-        D.simhash_candidates(
-            ngram_docs, collapse_exact=True, max_bucket=3, **SIMHASH_KW
-        ).filter(F.col("hamming") <= 8)
-    )
-    direct = _cc_over_pairs(
-        D.simhash_candidates(
-            ngram_docs, collapse_exact=False, **SIMHASH_KW
-        ).filter(F.col("hamming") <= 8)
-    )
+        expanded = _cc_over_pairs(
+            D.simhash_candidates(
+                ngram_docs, collapse_exact=True, max_bucket=3, **SIMHASH_KW
+            ).filter(F.col("hamming") <= 8)
+        )
+        direct = _cc_over_pairs(
+            D.simhash_candidates(
+                ngram_docs, collapse_exact=False, **SIMHASH_KW
+            ).filter(F.col("hamming") <= 8)
+        )
+        return quotient, expanded, direct
+
+    quotient, expanded, direct = cc_both_paths(run)
     assert quotient == expanded == direct
     # full intra-membership: the EMPTY-text clone pair fingerprints
     # (all-ones tie pattern) at Hamming 0 and must cluster — exactly
@@ -118,26 +134,38 @@ def test_simhash_quotient_equals_expanded_and_direct(ngram_docs):
     assert len({quotient[i] for i in (11, 12, 13)}) == 1
 
 
-def test_simhash_components_direct_path_matches(ngram_docs):
-    assert _labels(
-        D.simhash_components(
-            ngram_docs, collapse_exact=False, max_hamming=8, **SIMHASH_KW
+def test_simhash_components_direct_path_matches(ngram_docs, cc_both_paths):
+    got, ref = cc_both_paths(
+        lambda: (
+            _labels(
+                D.simhash_components(
+                    ngram_docs, collapse_exact=False, max_hamming=8, **SIMHASH_KW
+                )
+            ),
+            _cc_over_pairs(
+                D.simhash_candidates(
+                    ngram_docs, collapse_exact=False, **SIMHASH_KW
+                ).filter(F.col("hamming") <= 8)
+            ),
         )
-    ) == _cc_over_pairs(
-        D.simhash_candidates(
-            ngram_docs, collapse_exact=False, **SIMHASH_KW
-        ).filter(F.col("hamming") <= 8)
     )
+    assert got == ref
 
 
-def test_simhash_components_ungated(ngram_docs):
+def test_simhash_components_ungated(ngram_docs, cc_both_paths):
     # max_hamming=None keeps every banded candidate — same labels as CC
     # over the raw candidate set
-    assert _labels(
-        D.simhash_components(ngram_docs, collapse_exact=True, **SIMHASH_KW)
-    ) == _cc_over_pairs(
-        D.simhash_candidates(ngram_docs, collapse_exact=False, **SIMHASH_KW)
+    got, ref = cc_both_paths(
+        lambda: (
+            _labels(
+                D.simhash_components(ngram_docs, collapse_exact=True, **SIMHASH_KW)
+            ),
+            _cc_over_pairs(
+                D.simhash_candidates(ngram_docs, collapse_exact=False, **SIMHASH_KW)
+            ),
+        )
     )
+    assert got == ref
 
 
 # --- embedding cosine ------------------------------------------------------
@@ -159,31 +187,40 @@ def vec_docs(spark):
     return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
 
 
-def test_embedding_quotient_equals_expanded_and_direct(vec_docs):
+def test_embedding_quotient_equals_expanded_and_direct(vec_docs, cc_both_paths):
     kw = dict(threshold=0.4, n_planes=2, n_tables=4, dim=4)
-    quotient = _labels(
-        D.embedding_cosine_components(vec_docs, collapse_exact=True, **kw)
-    )
-    expanded = _cc_over_pairs(
-        D.embedding_cosine_dups(
-            vec_docs, collapse_exact=True, max_bucket=3, **kw
+
+    def run():
+        quotient = _labels(
+            D.embedding_cosine_components(vec_docs, collapse_exact=True, **kw)
         )
-    )
-    direct = _cc_over_pairs(
-        D.embedding_cosine_dups(vec_docs, collapse_exact=False, **kw)
-    )
+        expanded = _cc_over_pairs(
+            D.embedding_cosine_dups(
+                vec_docs, collapse_exact=True, max_bucket=3, **kw
+            )
+        )
+        direct = _cc_over_pairs(
+            D.embedding_cosine_dups(vec_docs, collapse_exact=False, **kw)
+        )
+        return quotient, expanded, direct
+
+    quotient, expanded, direct = cc_both_paths(run)
     assert quotient == expanded == direct
     assert {quotient[i] for i in (*range(1, 8), 11, 12, 13)} == {1}
     assert quotient[21] == quotient[22] == 21
     assert 31 not in quotient and 41 not in quotient and 42 not in quotient
 
 
-def test_embedding_components_threshold_above_one(vec_docs):
+def test_embedding_components_threshold_above_one(vec_docs, cc_both_paths):
     # cosine can never exceed 1.0: no rep pairs AND no intra clusters —
     # the expanded path emits no edges, the quotient path no labels
     kw = dict(threshold=1.5, n_planes=2, n_tables=4, dim=4)
     assert (
-        D.embedding_cosine_components(vec_docs, collapse_exact=True, **kw).count()
+        cc_both_paths(
+            lambda: D.embedding_cosine_components(
+                vec_docs, collapse_exact=True, **kw
+            ).count()
+        )
         == 0
     )
     assert (
@@ -193,7 +230,7 @@ def test_embedding_components_threshold_above_one(vec_docs):
         == 0
     )
 
-def test_quotient_labels_cross_edges_survive_empty_intra(spark):
+def test_quotient_labels_cross_edges_survive_empty_intra(spark, cc_both_paths):
     # ADVICE r8: the structural contract — groups connected by rep_pairs
     # cross edges must label their FULL member set even when
     # intra_members is empty (the degenerate threshold>1.0 shape where
@@ -207,14 +244,16 @@ def test_quotient_labels_cross_edges_survive_empty_intra(spark):
         "_tkey_id long, _tkey string",
     ).select(F.col("_tkey"), F.col("_tkey_id").alias("_mid"))
     rep_pairs = spark.createDataFrame([(1, 5)], "id_a long, id_b long")
-    labels = _labels(
-        D._quotient_labels(
-            rep_pairs,
-            groups,
-            members,
-            "_id",
-            "_tkey",
-            intra_members=members.limit(0),
+    labels = cc_both_paths(
+        lambda: _labels(
+            D._quotient_labels(
+                rep_pairs,
+                groups,
+                members,
+                "_id",
+                "_tkey",
+                intra_members=members.limit(0),
+            )
         )
     )
     # cross-connected groups ka+kb label ALL their members with the rep
@@ -223,7 +262,7 @@ def test_quotient_labels_cross_edges_survive_empty_intra(spark):
     assert labels == {1: 1, 2: 1, 5: 1}
 
 
-def test_quotient_labels_edge_free_needs_intra(spark):
+def test_quotient_labels_edge_free_needs_intra(spark, cc_both_paths):
     # edge-free groups still require >= 2 INTRA-ELIGIBLE members: with
     # empty intra_members and no rep pairs, nothing is labeled.
     groups = spark.createDataFrame([(21, "kx")], "_id long, _tkey string")
@@ -232,14 +271,18 @@ def test_quotient_labels_edge_free_needs_intra(spark):
     )
     empty_pairs = spark.createDataFrame([], "id_a long, id_b long")
     assert (
-        D._quotient_labels(
-            empty_pairs, groups, members, "_id", "_tkey",
-            intra_members=members.limit(0),
-        ).count()
+        cc_both_paths(
+            lambda: D._quotient_labels(
+                empty_pairs, groups, members, "_id", "_tkey",
+                intra_members=members.limit(0),
+            ).count()
+        )
         == 0
     )
     # and with intra eligibility present, the pair forms its own comp
-    labels = _labels(
-        D._quotient_labels(empty_pairs, groups, members, "_id", "_tkey")
+    labels = cc_both_paths(
+        lambda: _labels(
+            D._quotient_labels(empty_pairs, groups, members, "_id", "_tkey")
+        )
     )
     assert labels == {21: 21, 22: 21}
